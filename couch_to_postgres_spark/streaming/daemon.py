@@ -13,6 +13,7 @@ reference's disable flow (bin/daemon.js:174-186).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import threading
@@ -147,6 +148,11 @@ class Daemon:
         #: mode, affected pairs, churned docs, phase timings — on
         #: `/_status` without reading logs
         self._last_maintenance: dict[str, dict] = {}
+        #: each feed's last successful epoch (batch id, epoch wall time,
+        #: per-sink-step wall times), reported by the epoch function:
+        #: with the steps running concurrently, the slowest step is the
+        #: epoch's critical path
+        self._last_epoch: dict[str, dict] = {}
 
     def mirror_path(self, fc: FeedConfig) -> str:
         return os.path.join(self.data_root, "mirrors", fc.table + ".parquet")
@@ -203,6 +209,7 @@ class Daemon:
             if not fc.enabled or fc.name in self.queries:
                 continue
             os.makedirs(os.path.dirname(self.mirror_path(fc)), exist_ok=True)
+            on_epoch = functools.partial(self._last_epoch.__setitem__, fc.name)
             if fc.url:
                 q = follow_couch(
                     self.spark,
@@ -220,6 +227,7 @@ class Daemon:
                     vector_index_path=self.vector_index_path(fc),
                     vector_field=fc.vector_field,
                     vector_cells=fc.vector_cells,
+                    on_epoch=on_epoch,
                 )
             else:
                 q = follow(
@@ -235,6 +243,7 @@ class Daemon:
                     vector_index_path=self.vector_index_path(fc),
                     vector_field=fc.vector_field,
                     vector_cells=fc.vector_cells,
+                    on_epoch=on_epoch,
                 )
             self.queries[fc.name] = q
             started.append(fc.name)
@@ -420,10 +429,10 @@ class Daemon:
 
     def status(self) -> dict:
         """The `/_status` payload (bin/daemon.js:282-301): per-feed alive
-        flag, streaming progress, mirror doc count, and — for partitioned
-        mirrors — layout health (bucket count, base/delta row accounting,
-        small-file pressure), the numbers an operator needs to judge
-        compaction debt."""
+        flag, streaming progress, the last epoch's per-step wall times,
+        mirror doc count, and — for partitioned mirrors — layout health
+        (bucket count, base/delta row accounting, small-file pressure),
+        the numbers an operator needs to judge compaction debt."""
         from couch_to_postgres_spark.streaming.partitioned import (
             bucket_file_counts,
             read_meta,
@@ -512,6 +521,9 @@ class Daemon:
                 # (mode/affected_pairs/churned_docs/phase_timings) —
                 # maintenance cost belongs on the operator surface
                 "index_maintenance": self._last_maintenance.get(fc.name),
+                # the feed's last successful epoch: batch_id, wall_s and
+                # steps_s (wall seconds per concurrent sink step)
+                "last_epoch": self._last_epoch.get(fc.name),
                 "sketch_states": sketch_states,
                 "last_progress": {
                     k: progress.get(k)

@@ -4,7 +4,7 @@ build-plan Stage 4): change stream → idempotent merge → parquet mirror.
 Spark shape of the reference lifecycle::
 
     read_change_stream(...)                      # A1 source, A2 rate limit
-      .writeStream.foreachBatch(merge)           # A3-A7 via operators.cdc
+      .writeStream.foreachBatch(_run_epoch)      # A3-A7 via operators.cdc
       .option("checkpointLocation", ...)         # A8/A9 checkpointer
       .trigger(...)                              # cadence (20 s / availableNow)
 
@@ -12,6 +12,15 @@ Delivery is at-least-once (offsets commit after the batch, like the
 reference's trailing `since` checkpoint, lib/index.js:62-94); the
 rev-aware merge makes replays no-ops, so the mirror state is effectively
 exactly-once — the same argument the reference makes (lib/index.js:110-128).
+
+One epoch function (:func:`_run_epoch`) serves both entry points: it
+persists the raw micro-batch once, then runs the mirror merge and each
+configured index twin (BM25, shingle, vector) at the same time, one
+thread per step, and re-raises the first error once all have returned.
+Step order does not matter: each sink writes its own root and is
+idempotent on replay (*Structured Streaming*'s replayable-source plus
+idempotent-sink argument, SIGMOD 2018), and no reader joins index hits
+to the mirror, so readers never had atomicity across the structures.
 
 Mirror persistence is pure parquet with an atomic directory swap
 (write to ``<path>.tmp`` → rename). Where Delta/Iceberg is available the
@@ -23,6 +32,8 @@ from __future__ import annotations
 
 import os
 import shutil
+import time
+from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -144,8 +155,6 @@ def upsert_mirror(
     merge plan itself (broadcast-anti-join, no mirror shuffle) is
     unchanged.
     """
-    import time
-
     current = read_mirror(spark, mirror_path)
     # Persist the batch: apply_changes references it twice (touched-key
     # anti-join side + upsert union side); without this the whole
@@ -240,8 +249,7 @@ def _feed_search_index(
     search_text: Callable[[Column], Column] | None,
 ) -> None:
     """Keep the streaming BM25 index in step with the mirror from the
-    SAME micro-batch (change frame: :func:`_latest_text_changes`).
-    Shared by ``follow`` and ``follow_couch``."""
+    SAME micro-batch (change frame: :func:`_latest_text_changes`)."""
     from couch_to_postgres_spark.streaming.search_stream import (
         search_index_batch,
     )
@@ -375,6 +383,137 @@ def _feed_vector_index(
         vector_index_batch(spark, vector_index_path, changes)
 
 
+@dataclass
+class _Feed:
+    """One feed's sinks: the mirror plus each index twin with a path."""
+
+    mirror_path: str
+    sink: str
+    num_buckets: int | None
+    type_filter: str | None
+    map_hook: Callable[[Column], Column] | None
+    count_views: dict[str, Column] | None
+    search_index_path: str | None
+    search_text: Callable[[Column], Column] | None
+    shingle_index_path: str | None
+    shingle_n: int
+    vector_index_path: str | None
+    vector_field: str
+    vector_cells: int
+    on_epoch: Callable[[dict], None] | None
+
+    def __post_init__(self) -> None:
+        if self.sink not in ("partitioned", "flat"):
+            raise ValueError(f"unknown sink {self.sink!r}: use 'partitioned' or 'flat'")
+
+    def steps(self) -> list[tuple[str, Callable[[DataFrame], None]]]:
+        """This epoch's ``(name, fn(batch))`` sink steps. An EXISTING
+        mirror's layout wins over ``sink``; meta is checked first, as a
+        partitioned write leaves a top-level _SUCCESS marker that
+        _current_version would misread as the legacy flat layout."""
+        from couch_to_postgres_spark.streaming.partitioned import (
+            read_meta,
+            upsert_partitioned_mirror,
+        )
+
+        tf, hook, views = self.type_filter, self.map_hook, self.count_views
+        partitioned = read_meta(self.mirror_path) is not None or (
+            self.sink == "partitioned" and _current_version(self.mirror_path) is None
+        )
+        upsert = upsert_partitioned_mirror if partitioned else upsert_mirror
+        kw = {"num_buckets": self.num_buckets} if partitioned else {}
+        steps = [("mirror", lambda b: upsert(
+            b.sparkSession, self.mirror_path, b, type_filter=tf,
+            map_hook=hook, count_views=views, **kw))]
+        if self.search_index_path is not None:
+            steps.append(("search", lambda b: _feed_search_index(
+                b, self.search_index_path, tf, hook, self.search_text)))
+        if self.shingle_index_path is not None:
+            steps.append(("shingle", lambda b: _feed_shingle_index(
+                b, self.shingle_index_path, tf, hook, self.search_text,
+                shingle_n=self.shingle_n)))
+        if self.vector_index_path is not None:
+            steps.append(("vector", lambda b: _feed_vector_index(
+                b, self.vector_index_path, tf, hook,
+                vector_field=self.vector_field, vector_cells=self.vector_cells)))
+        return steps
+
+
+def _run_epoch(
+    feed: _Feed,
+    batch: DataFrame,
+    epoch_id: int,
+    split: Callable[[DataFrame], DataFrame] | None = None,
+) -> None:
+    """The ``foreachBatch`` function of both entry points (module
+    docstring). ``split``, :func:`follow`'s quarantine, runs serially
+    before the fan-out. ``InheritableThread`` copies this thread's Spark
+    local properties: every step's jobs carry the stream's job group and
+    query id, so ``query.stop()`` cancels them."""
+    from pyspark import InheritableThread
+
+    t0 = time.perf_counter()
+    steps = feed.steps()
+    wall: dict[str, float] = {}
+    errors: dict[str, BaseException] = {}
+
+    def run(name: str, fn: Callable[[DataFrame], None], batch: DataFrame) -> None:
+        t = time.perf_counter()
+        try:
+            fn(batch)
+        except BaseException as e:  # noqa: BLE001 — re-raised below
+            errors[name] = e
+        finally:
+            wall[name] = round(time.perf_counter() - t, 3)
+
+    raw = None
+    if split is not None or len(steps) > 1:
+        # (a lone mirror step persists its own filtered child)
+        raw = batch = batch.persist()
+    try:  # unpersist always: a processingTime daemon would keep them all
+        if raw is not None:
+            # built before any step plans over it: one scan of the
+            # source, and each step gets the plan it had over a built
+            # cache when the steps ran one after another
+            raw.count()
+        if split is not None:
+            batch = split(batch)
+        threads = [InheritableThread(run, args=(*step, batch)) for step in steps]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+    finally:
+        if raw is not None:
+            raw.unpersist()
+    for name, _ in steps:
+        if name in errors:
+            raise errors[name]
+    if feed.on_epoch is not None:
+        feed.on_epoch({"batch_id": epoch_id, "steps_s": wall,
+                       "wall_s": round(time.perf_counter() - t0, 3)})
+
+
+def _start(
+    stream: DataFrame,
+    feed: _Feed,
+    checkpoint_path: str,
+    query_name: str | None,
+    trigger: dict | None,
+    split: Callable[[DataFrame], DataFrame] | None = None,
+) -> StreamingQuery:
+    writer = (
+        stream.writeStream.foreachBatch(
+            lambda batch, epoch_id: _run_epoch(feed, batch, epoch_id, split)
+        )
+        .option("checkpointLocation", checkpoint_path)
+        .outputMode("update")
+    )
+    if query_name:
+        writer = writer.queryName(query_name)
+    return writer.trigger(**(trigger or {"availableNow": True})).start()
+
+
 def follow(
     spark: SparkSession,
     changes_path: str,
@@ -396,6 +535,7 @@ def follow(
     vector_index_path: str | None = None,
     vector_field: str = "$.embedding",
     vector_cells: int = 16,
+    on_epoch: Callable[[dict], None] | None = None,
 ) -> StreamingQuery:
     """Start one feed's replication query (the `engine.follow(db)` API —
     the reference's `new PostgresCouchDB(...).start()`,
@@ -404,7 +544,7 @@ def follow(
     ``search_index_path`` additionally maintains the streaming BM25
     index (``streaming/search_stream.py``) from the SAME micro-batches —
     the mirror becomes a searchable live corpus with one flag, at
-    O(changed docs) per batch on top of the merge. The index sees
+    O(changed docs) per batch beside the merge. The index sees
     exactly what the mirror sees: the per-key latest change after
     ``type_filter`` (shared ``filtered_latest`` — the two states cannot
     drift on filter semantics) with ``map_hook`` applied, tokenized by
@@ -419,6 +559,8 @@ def follow(
     decontamination reads live index state instead of re-shingling the
     mirror per run; ``shingle_n`` picks the fingerprinted n-gram width
     and is recorded in the index so mismatched readers fail loudly.
+    ``vector_index_path`` maintains the IVF vector twin
+    (``_feed_vector_index``) over the embedding at ``vector_field``.
 
     ``sink`` picks the mirror layout: ``"partitioned"`` (default) merges
     into the bucket-partitioned mirror — per-batch cost O(touched
@@ -441,30 +583,31 @@ def follow(
     draining instead of crash-looping on one bad record. At-least-once
     like the mirror itself: a replayed batch re-appends its corrupt rows,
     so consumers of the quarantine dedupe on the raw line.
+
+    ``on_epoch(record)`` runs after each successful epoch: ``batch_id``,
+    ``wall_s`` and ``steps_s`` (wall seconds per sink step).
     """
-    if sink not in ("partitioned", "flat"):
-        raise ValueError(f"unknown sink {sink!r}: use 'partitioned' or 'flat'")
+    feed = _Feed(
+        mirror_path, sink, num_buckets, type_filter, map_hook, count_views,
+        search_index_path, search_text, shingle_index_path, shingle_n,
+        vector_index_path, vector_field, vector_cells, on_epoch,
+    )
     stream = read_change_stream(
         spark,
         changes_path,
         max_files_per_trigger,
         with_corrupt_column=quarantine_path is not None,
     )
+    split = None
+    if quarantine_path is not None:
 
-    def _merge(batch: DataFrame, epoch_id: int) -> None:
-        from couch_to_postgres_spark.streaming.partitioned import (
-            upsert_partitioned_mirror,
-        )
-
-        raw = None
-        if quarantine_path is not None:
+        def split(batch: DataFrame) -> DataFrame:
             # keep ALL columns in the quarantine query: Spark's analyzer
             # rejects any query over a raw JSON scan that references only
             # _corrupt_record (QUERY_ONLY_CORRUPT_RECORD_COLUMN) — the
             # parsed columns are NULL on poison rows anyway, and the
-            # persist keeps the JSON parse single-pass across the
+            # epoch's persist keeps the JSON parse single-pass across the
             # quarantine write and the merge
-            raw = batch = batch.persist()
             bad = batch.filter(F.col("_corrupt_record").isNotNull())
             if bad.count() > 0:
                 # rename on the way out: a stored JSON file whose only
@@ -473,84 +616,11 @@ def follow(
                 bad.withColumnRenamed("_corrupt_record", "raw_record").write.mode(
                     "append"
                 ).json(quarantine_path)
-            batch = batch.filter(F.col("_corrupt_record").isNull()).drop(
+            return batch.filter(F.col("_corrupt_record").isNull()).drop(
                 "_corrupt_record"
             )
-        elif (
-            search_index_path is not None
-            or shingle_index_path is not None
-            or vector_index_path is not None
-        ):
-            # the index feed re-runs the batch source on top of the
-            # mirror merge's own actions (and search_index_batch itself
-            # runs several) — persist once so the change-log scan is
-            # single-pass per epoch instead of re-read per action
-            raw = batch = batch.persist()
-        try:
-            # layout of an EXISTING mirror wins over the sink argument.
-            # Meta check FIRST: a partitioned write leaves a top-level
-            # _SUCCESS marker that _current_version would misread as the
-            # legacy flat layout.
-            from couch_to_postgres_spark.streaming.partitioned import read_meta
 
-            use_partitioned = sink == "partitioned"
-            if read_meta(mirror_path) is not None:
-                use_partitioned = True
-            elif _current_version(mirror_path) is not None:
-                use_partitioned = False
-            if use_partitioned:
-                upsert_partitioned_mirror(
-                    batch.sparkSession,
-                    mirror_path,
-                    batch,
-                    num_buckets=num_buckets,
-                    type_filter=type_filter,
-                    map_hook=map_hook,
-                    count_views=count_views,
-                )
-            else:
-                upsert_mirror(
-                    batch.sparkSession,
-                    mirror_path,
-                    batch,
-                    type_filter=type_filter,
-                    map_hook=map_hook,
-                    count_views=count_views,
-                )
-            if search_index_path is not None:
-                _feed_search_index(
-                    batch, search_index_path, type_filter, map_hook,
-                    search_text,
-                )
-            if shingle_index_path is not None:
-                _feed_shingle_index(
-                    batch, shingle_index_path, type_filter, map_hook,
-                    search_text, shingle_n=shingle_n,
-                )
-            if vector_index_path is not None:
-                _feed_vector_index(
-                    batch, vector_index_path, type_filter, map_hook,
-                    vector_field=vector_field, vector_cells=vector_cells,
-                )
-        finally:
-            # unpersist the RAW batch: the upsert only unpersists its
-            # own (filtered) child, so without this a processingTime
-            # daemon accumulates one cached batch per epoch — unbounded
-            if raw is not None:
-                raw.unpersist()
-
-    writer = (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("update")
-    )
-    if query_name:
-        writer = writer.queryName(query_name)
-    if trigger is None:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return _start(stream, feed, checkpoint_path, query_name, trigger, split)
 
 
 def follow_couch(
@@ -578,6 +648,7 @@ def follow_couch(
     vector_index_path: str | None = None,
     vector_field: str = "$.embedding",
     vector_cells: int = 16,
+    on_epoch: Callable[[dict], None] | None = None,
 ) -> StreamingQuery:
     """`follow` against a LIVE CouchDB `_changes` feed via the
     ``format("couchdb")`` data source (offset = couch ``since``, durable
@@ -588,12 +659,16 @@ def follow_couch(
     connection, newline-delimited incremental lines — lib/index.js:50-53);
     ``limit`` is the A2 admission-control page bound. No quarantine option: the source
     parses upstream and surfaces transport errors typed (no_db_file ≠
-    transient). ``search_index_path``/``search_text``/
-    ``shingle_index_path`` maintain the live BM25 / decontamination
-    shingle indexes from the same micro-batches, exactly as in
-    :func:`follow`."""
+    transient). The sink arguments (mirror layout, count views, the
+    BM25 / shingle / vector twins, ``on_epoch``) and the epoch itself
+    are exactly those of :func:`follow`."""
     from couch_to_postgres_spark.sources.couchdb_source import register
 
+    sinks = _Feed(
+        mirror_path, sink, num_buckets, type_filter, map_hook, count_views,
+        search_index_path, search_text, shingle_index_path, shingle_n,
+        vector_index_path, vector_field, vector_cells, on_epoch,
+    )
     register(spark)
     reader = (
         spark.readStream.format("couchdb")
@@ -609,80 +684,7 @@ def follow_couch(
     ):
         if v is not None:
             reader = reader.option(k, v)
-    stream = reader.load()
-
-    def _merge(batch: DataFrame, epoch_id: int) -> None:
-        from couch_to_postgres_spark.streaming.partitioned import (
-            read_meta,
-            upsert_partitioned_mirror,
-        )
-
-        use_partitioned = sink == "partitioned"
-        if read_meta(mirror_path) is not None:
-            use_partitioned = True
-        elif _current_version(mirror_path) is not None:
-            use_partitioned = False
-        raw = None
-        if (
-            search_index_path is not None
-            or shingle_index_path is not None
-            or vector_index_path is not None
-        ):
-            # persist: the index feed would otherwise re-pull the
-            # micro-batch from the live _changes source on top of the
-            # merge's own actions (see follow._merge)
-            raw = batch = batch.persist()
-        try:
-            if use_partitioned:
-                upsert_partitioned_mirror(
-                    batch.sparkSession,
-                    mirror_path,
-                    batch,
-                    num_buckets=num_buckets,
-                    type_filter=type_filter,
-                    map_hook=map_hook,
-                    count_views=count_views,
-                )
-            else:
-                upsert_mirror(
-                    batch.sparkSession,
-                    mirror_path,
-                    batch,
-                    type_filter=type_filter,
-                    map_hook=map_hook,
-                    count_views=count_views,
-                )
-            if search_index_path is not None:
-                _feed_search_index(
-                    batch, search_index_path, type_filter, map_hook,
-                    search_text,
-                )
-            if shingle_index_path is not None:
-                _feed_shingle_index(
-                    batch, shingle_index_path, type_filter, map_hook,
-                    search_text, shingle_n=shingle_n,
-                )
-            if vector_index_path is not None:
-                _feed_vector_index(
-                    batch, vector_index_path, type_filter, map_hook,
-                    vector_field=vector_field, vector_cells=vector_cells,
-                )
-        finally:
-            if raw is not None:
-                raw.unpersist()
-
-    writer = (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("update")
-    )
-    if query_name:
-        writer = writer.queryName(query_name)
-    if trigger is None:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return _start(reader.load(), sinks, checkpoint_path, query_name, trigger)
 
 
 def mirror_doc_count(spark: SparkSession, mirror_path: str) -> int:
